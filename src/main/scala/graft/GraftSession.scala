@@ -1,21 +1,44 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.internal.StaticSQLConf
 
 /** Session factory with the engine's tuned defaults: AQE (runtime
   * re-planning, skew-join splitting, partition coalescing), shuffle
-  * partitions sized to cores (not 200), UTC, UI off, and the native
-  * function extensions registered. All driver-contract mains build
-  * through here. */
+  * partitions sized to cores (not 200), a generated-class cache sized to
+  * the engine's working set, UTC, UI off, and the native function
+  * extensions registered. All driver-contract mains build through here.
+  *
+  * Invariant: a warm pass compiles no class an earlier pass compiled
+  * (measured: 0 compiles a warm pass on the ETL lifecycle, 0–2 new plan
+  * shapes on the query mix). Spark keeps every class that
+  * whole-stage codegen and the projection generators compile in one
+  * JVM-wide LRU cache whose default size (100 entries) is smaller than one
+  * pass of the engine's workloads, so each pass evicted what the next pass
+  * would ask for and recompiled it (the ETL lifecycle plus notebook EDA
+  * compiles 153 distinct classes a pass, recompiled 146 of them on every
+  * warm pass). [[CodegenCacheEntries]] holds a whole pass. A class that
+  * fails to compile is never cached (Spark falls back to `eval` and
+  * compiles it again next time), so the invariant also needs every native
+  * expression's generated code to compile.
+  *
+  * The entry count is a static SQL conf that `CodeGenerator` reads once,
+  * when its cache is built at the JVM's first codegen. It therefore only
+  * takes effect on the builder of the first session of the JVM: a later
+  * `getOrCreate` that hands back a running session ignores static confs,
+  * and a new session cannot resize a cache that already exists. */
 object GraftSession {
-  /** `periodicGC`: ContextCleaner driver-GC cadence. The 2min default
-    * keeps shuffle/broadcast state draining on long-running drivers
-    * (see the config comment below). Harness mains that already force a
-    * GC between every timed pass (Bench/BenchWide) pass a long interval
-    * instead: a periodic full GC landing MID-pass on a 24–48 g heap is
-    * a multi-second STW stall that polluted the very measurements the
-    * cleaner hygiene was meant to protect (q214 sf3: median 31.9 s
-    * cv 0.25 with 2min, 16.7 s cv 0.17 with the periodic GC pushed out). */
+  /** Entries in Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`), sized from the largest
+    * looping harness: one pass of the 31-query `graft.Bench` headline at
+    * sf0.1 compiles 618 distinct classes cold and 7 more in its first warm
+    * pass. The cache evicts within 4 independent segments (512 entries
+    * each here), so 2048 holds that pass about 3× over. Each retained
+    * entry costs ~25 KB of driver heap (525 more entries: +12.0 to
+    * +14.7 MB after GC, 4-core box) and ~7 KB of metaspace; a full cache
+    * is ~50 MB. */
+  val CodegenCacheEntries: Int = 2048
+
   /** The session's shuffle-partition default: `= cores`, env-overridable.
     * ADJUDICATED, not arbitrary — raising it regresses the
     * checkpoint-heavy funnel family (re-proven round 13 on the current
@@ -27,6 +50,14 @@ object GraftSession {
   private[graft] def shufflePartitions(cores: String): String =
     sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cores)
 
+  /** `periodicGC`: ContextCleaner driver-GC cadence. The cleaner reclaims
+    * shuffle files, broadcasts and accumulators only when the driver GCs
+    * their references, so a big driver heap that rarely collects piles up
+    * stale state (7 identical q22 passes at sf10: 11 s → 47 s without a
+    * periodic GC, flat ~11 s with it). 2min keeps the cleaner draining.
+    * Harness mains that force a GC between timed passes pass a long
+    * interval instead: a full GC landing mid-pass is a multi-second stall
+    * (q214 sf3 median 31.9 s at 2min, 16.7 s with it pushed out). */
   def local(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"),
             app: String = "graft",
             periodicGC: String = "2min"): SparkSession = {
@@ -61,18 +92,8 @@ object GraftSession {
         sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS",
           shufflePartitions(cores)))
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // ContextCleaner only reclaims shuffle files, broadcasts, and
-      // accumulator state when the DRIVER GCs their references — and a
-      // large driver heap (24–48 g at the scale points) can run for many
-      // minutes without a collection, so stale state piles up and
-      // repeated jobs degrade (measured: 7 identical q22 passes at sf10
-      // went 11 s → 47 s with used heap 5.7 → 23 GB; with periodic GC
-      // they hold ~11 s flat at ~0.6 GB). Spark ships a guard for exactly
-      // this — periodic driver GC — but its 30 min default is longer
-      // than most of our runs. 2 min keeps the cleaner draining on any
-      // long-running driver, cluster or local.
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", periodicGC))
+      .config(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key, CodegenCacheEntries.toLong)
+      .config("spark.cleaner.periodicGC.interval", periodicGC)
       // Reliable-checkpoint mode (SPARK_GRAFT_CKPT_DIR, see Ckpt): let
       // the ContextCleaner delete checkpoint FILES once their RDDs are
       // GC'd, so a long-running driver's durable checkpoint dir drains

@@ -39,12 +39,16 @@ object Eda {
       "price_outliers"  -> Profile.iqrOutliers(withPrice, "price_clean"))
   }
 
-  /** Cell 10: temporal trend + sentiment split (reviews side). */
+  /** Cell 10: temporal trend + sentiment split (reviews side). Takes the
+    * transformed reviews or their sink read-back, where a null
+    * `date_clean` is the literal 'nan' ([[Sinks.sinkForm]]): it reads as
+    * null, not as a date to parse. */
   def reviews(df: DataFrame): Map[String, DataFrame] = {
     val withSent = if (df.columns.contains("sentiment_score")) df
       else df.withColumn("sentiment_score", CleanFns.sentiment(col("comments")))
     val dated = if (df.columns.contains("date_clean"))
-      df.withColumn("__d", to_date(col("date_clean"))) else df.withColumn("__d", to_date(col("date")))
+      df.withColumn("__d", to_date(nullif(col("date_clean"), lit("nan"))))
+      else df.withColumn("__d", to_date(col("date")))
     Map(
       "monthly_trend" -> dated.groupBy(date_format(col("__d"), "yyyy-MM").as("mes"))
         .agg(count(lit(1)).as("cnt")).orderBy("mes"),

@@ -114,6 +114,23 @@ object Sinks {
     }
   }
 
+  /** [[sinkForm]] plus complex columns (arrays, structs, maps)
+    * JSON-stringified: row-oriented sinks have no column type for them
+    * (the CSV writer rejects them, JDBC has no `array<string>` type), and
+    * the reference stringifies every object column at its sink anyway. */
+  private def flatForm(df: DataFrame): DataFrame = {
+    val sf = sinkForm(df)
+    sf.schema.fields.foldLeft(sf) { (d, f) =>
+      f.dataType match {
+        case _: org.apache.spark.sql.types.ArrayType |
+             _: org.apache.spark.sql.types.StructType |
+             _: org.apache.spark.sql.types.MapType =>
+          d.withColumn(f.name, to_json(col(f.name)))
+        case _ => d
+      }
+    }
+  }
+
   /** Primary sink: parquet per table, `raw_<name>_transformado` naming
     * (carga.py:50-52). Returns the written path. */
   def parquet(df: DataFrame, outDir: String, name: String): String = {
@@ -124,22 +141,11 @@ object Sinks {
 
   /** CSV sink — the DISTRIBUTED sibling of the reference's Excel export
     * ([[xlsx]] writes the actual .xlsx report; this path scales past its
-    * row limit). Complex columns (arrays/structs) are JSON-stringified
-    * — the CSV writer rejects them raw, and the reference stringifies
-    * every object column at its sink anyway. Writes a JSON 'Resumen'
-    * aside (rows, cols, timestamp — carga.py:75-83's summary sheet). */
+    * row limit), in [[flatForm]]. Writes a JSON 'Resumen' aside (rows,
+    * cols, timestamp — carga.py:75-83's summary sheet). */
   def csv(df: DataFrame, outDir: String, name: String): String = {
     val path = s"$outDir/csv_$name"
-    val flat = sinkForm(df).schema.fields.foldLeft(sinkForm(df)) { (d, f) =>
-      f.dataType match {
-        case _: org.apache.spark.sql.types.ArrayType |
-             _: org.apache.spark.sql.types.StructType |
-             _: org.apache.spark.sql.types.MapType =>
-          d.withColumn(f.name, to_json(col(f.name)))
-        case _ => d
-      }
-    }
-    flat.write.mode("overwrite").option("header", "true").csv(path)
+    flatForm(df).write.mode("overwrite").option("header", "true").csv(path)
     val resumen =
       s"""{"registros":${df.count()},"columnas":${df.columns.length},"generado":"${java.time.Instant.now()}"}"""
     Files.writeString(Paths.get(s"$outDir/csv_${name}_resumen.json"), resumen)
@@ -187,13 +193,13 @@ object Sinks {
     Some(path)
   }
 
-  /** S5 over real JDBC (carga.py:34-58): sink-form rules applied, then a
+  /** S5 over real JDBC (carga.py:34-58): [[flatForm]], then a
     * distributed `write.jdbc` (each partition opens its own connection —
     * no driver-side collect). Overwrite drops and recreates the table,
     * the reference's if_exists='replace'. */
   def jdbc(df: DataFrame, url: String, table: String,
            props: java.util.Properties = new java.util.Properties): Unit =
-    sinkForm(df).write.mode("overwrite").jdbc(url, table, props)
+    flatForm(df).write.mode("overwrite").jdbc(url, table, props)
 
   /** S7 verification (carga.py:95-121): read every sink back, count. */
   def verify(spark: SparkSession, outDir: String, names: Seq[String]): Map[String, Long] =

@@ -105,18 +105,20 @@ case class Hash60MapExpr(child: Expression, mod: Long)
   override def prettyName: String = "graft_hash60_map"
 
   override def nullSafeEval(input: Any): Any =
-    Hash60MapExpr.map(input.asInstanceOf[ArrayData], mod)
+    Hash60MapExpr.hashes(input.asInstanceOf[ArrayData], mod)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.Hash60MapExpr.map($c, ${mod}L)")
+    defineCodeGen(ctx, ev, c => s"graft.plans.Hash60MapExpr.hashes($c, ${mod}L)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 object Hash60MapExpr {
-  /** See [[Hash60MapExpr]]. Called from codegen. */
-  def map(arr: ArrayData, mod: Long): ArrayData = {
+  /** See [[Hash60MapExpr]]. Called from codegen through the class's
+    * static forwarder, which Scala omits for a name the case class also
+    * inherits (`TreeNode.map`): keep this name off TreeNode's members. */
+  def hashes(arr: ArrayData, mod: Long): ArrayData = {
     val n = arr.numElements()
     val out = new Array[Any](n)
     var i = 0

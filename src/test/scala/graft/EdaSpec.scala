@@ -1,6 +1,6 @@
 package graft
 
-import graft.pipeline.{Eda, Pipeline, Transforms}
+import graft.pipeline.{Eda, Pipeline, Sinks, Transforms}
 import org.apache.spark.sql.functions._
 
 class EdaSpec extends SparkSpec {
@@ -38,6 +38,26 @@ class EdaSpec extends SparkSpec {
     assert(dr.getString(0) == "2016-01-08" && dr.getString(1) == "2016-02-10")
     val sent = s("sentiment").collect()(0)
     assert(sent.getAs[Long]("n_pos") == 1 && sent.getAs[Long]("n_neg") == 1 && sent.getAs[Long]("n_neu") == 1)
+  }
+
+  test("reviews EDA over the parquet sink read-back: 'nan' dates read as null") {
+    val reviews = Transforms.reviews(Seq(
+      (10L, 1L, "2016-01-08", "ana", "excellent stay"),
+      (11L, 1L, "not a date", "bo", "terrible"),
+      (12L, 2L, "2016-02-10", "cy", "meh")
+    ).toDF("id", "listing_id", "date", "reviewer_name", "comments"))
+    val out = java.nio.file.Files.createTempDirectory("graft_eda_sink").toString
+    val back = spark.read.parquet(Sinks.parquet(reviews, out, "reviews"))
+    assert(back.filter(col("date_clean") === "nan").count() == 1L)
+
+    def sections(df: org.apache.spark.sql.DataFrame) =
+      Eda.reviews(df).map { case (k, v) => k -> v.collect().toSeq }
+    val fromSink = sections(back)
+    assert(fromSink("monthly_trend").map(r => (r.getString(0), r.getLong(1))).toSet
+      == Set(("2016-01", 1L), ("2016-02", 1L), (null, 1L)))
+    val dr = fromSink("date_range").head
+    assert(dr.getString(0) == "2016-01-08" && dr.getString(1) == "2016-02-10")
+    assert(fromSink == sections(reviews))
   }
 
   test("quality section: tableInfo + worst nulls") {

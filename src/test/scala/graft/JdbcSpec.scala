@@ -36,6 +36,19 @@ class JdbcSpec extends SparkSpec {
       (3L, "depto centro", 2200.0)))
   }
 
+  test("jdbc sink JSON-stringifies array and struct columns, like the csv sink") {
+    val df = Seq(
+      (1L, Seq("Wifi", "Kitchen"), ("Roma", 2)),
+      (2L, Seq.empty[String], ("Condesa", 0))
+    ).toDF("id", "amenities_procesados", "loc")
+
+    Sinks.jdbc(df, url, "complex_t", props)
+    val back = new JdbcSource(url, props).load(spark, "complex_t")
+    assert(back.orderBy("id").as[(Long, String, String)].collect().toSeq === Seq(
+      (1L, """["Wifi","Kitchen"]""", """{"_1":"Roma","_2":2}"""),
+      (2L, "[]", """{"_1":"Condesa","_2":0}""")))
+  }
+
   test("absent jdbc table loads as an empty frame") {
     val back = new JdbcSource(url, props).load(spark, "no_such_table")
     assert(back.isEmpty)

@@ -51,13 +51,22 @@ class ShingleExprsSpec extends SparkSpec {
   test("Hash60MapExpr = transform(portableHash [% p])") {
     val df = texts(200).toDF("text").repartition(3)
       .select(TextFns.wordShingles(col("text"), 3).as("sh"))
-    val mism = df.select(
-        transform(col("sh"), x => TextFns.portableHash(x) % Dedup.MinhashP).as("refMod"),
-        Hash60MapExpr(col("sh"), Dedup.MinhashP).as("natMod"),
-        transform(col("sh"), x => TextFns.portableHash(x)).as("refRaw"),
-        Hash60MapExpr(col("sh"), 0L).as("natRaw"))
-      .filter(col("natMod") =!= col("refMod") || col("natRaw") =!= col("refRaw"))
-    assert(mism.count() == 0)
+    // a generated class that fails to compile would otherwise fall back
+    // to `eval` silently, and be compiled again on every run
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    try {
+      val mism = df.select(
+          transform(col("sh"), x => TextFns.portableHash(x) % Dedup.MinhashP).as("refMod"),
+          Hash60MapExpr(col("sh"), Dedup.MinhashP).as("natMod"),
+          transform(col("sh"), x => TextFns.portableHash(x)).as("refRaw"),
+          Hash60MapExpr(col("sh"), 0L).as("natRaw"))
+        .filter(col("natMod") =!= col("refMod") || col("natRaw") =!= col("refRaw"))
+      assert(mism.count() == 0)
+    } finally {
+      spark.conf.unset("spark.sql.codegen.fallback")
+      spark.conf.unset("spark.sql.codegen.factoryMode")
+    }
   }
 
   test("minhash signatures unchanged by the native kernels") {
